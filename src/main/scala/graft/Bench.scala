@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are written to the `noop` sink — unlike
@@ -15,38 +18,44 @@ import org.apache.spark.sql.SparkSession
   *    timed as a fast no-op;
   *  - after every query the session's storage is swept (cache registry +
   *    all persistent RDDs, which includes `localCheckpoint` blocks): a
-  *    single JVM runs warmup + N passes over 100 queries, and storage
+  *    single JVM runs warmup + N sweeps over 100+ queries, and storage
   *    left behind by one query otherwise accumulates into the memory
   *    pressure / ContextCleaner churn that once killed a full run with a
   *    vanished-broadcast-block executor error.
   */
 object Bench {
+  /** Scheduler-side shape since the last `reset()`: Spark jobs launched,
+    * stages completed, tasks run and their summed executor run time —
+    * the "how many passes / barriers does this entry really pay" number
+    * that `explain` can't show for ops that loop or collect mid-query
+    * (k-means rounds, CC iterations, trainer fits). */
+  private final class ShapeListener extends SparkListener {
+    private val jobs = new AtomicInteger
+    private val stages = new AtomicInteger
+    private val tasks = new AtomicInteger
+    private val runMs = new AtomicLong
+    def reset(): Unit = {
+      jobs.set(0); stages.set(0); tasks.set(0); runMs.set(0L)
+    }
+    def json: String =
+      s"""{"jobs":${jobs.get},"stages":${stages.get},""" +
+        s""""tasks":${tasks.get},"task_run_s":${runMs.get / 1000.0}}"""
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (t.taskMetrics != null) runMs.addAndGet(t.taskMetrics.executorRunTime)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // memory-governed override: decoupling shuffle partitions from the
-    // thread count (more, smaller partitions on fewer threads) caps the
-    // CONCURRENT per-task memory footprint — the executor-sizing lever a
-    // capped-heap deployment turns first (SCALE.md §CC memory sizing)
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // process-boundary override (see [[BenchMaster]] / SCALE.md §r18)
-    val master = BenchMaster.resolve(s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // The cross-sweep reps protocol runs the whole catalog between the
-      // two samples of any one query. The generated-code cache's default
-      // 100 entries is far below one sweep's stage count, so without this
-      // every timed sample would pay janino recompilation (~100-300 ms per
-      // stage) that the warmup pass already paid — measured as a uniform
-      // ~1.45x inflation across the catalog, including untouched trivial
-      // entries. Sized to hold every stage of a full sweep.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-    val spark = BenchMaster.configure(builder0, master).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val shape = new ShapeListener
+    spark.sparkContext.addSparkListener(shape)
 
     def sweep(): Unit = {
       spark.catalog.clearCache()
@@ -57,7 +66,7 @@ object Bench {
       // buffers) faster than the ContextCleaner's weak-ref GC cadence
       // reclaims it, and a major GC landing mid-query shows up as a
       // random 3-10x single-query inflation that min-of-N can't mask
-      // when both passes are taxed. One forced full GC per query keeps
+      // when both samples are taxed. One forced full GC per query keeps
       // the timed windows collection-quiet.
       System.gc()
     }
@@ -69,100 +78,55 @@ object Bench {
     def selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // JIT/codegen warmup: run the whole catalog once at the smallest sf so
+    // JIT/codegen warmup: run the whole catalog once at a small sf so
     // measured times reflect steady-state execution, not first-call JVM and
     // codegen compilation (observed 5-10x first-run inflation locally).
     // Warmup failures are ignored here — the same failure will surface,
     // recorded, in the timed run below.
-    // Warmup runs at sf0.01 by default (sf0.001 fallback): r14 per-sample
-    // profiling showed the sf0.001 warmup leaves sf0.1-shape code paths
-    // (AQE join choices, bigger-batch loops) uncompiled, so each entry's
-    // first timed sample carried 1.6-3.4 s of background C2 JIT — timed-
-    // window JIT dropped 168-196 s -> 139-146 s per sweep when warmup
-    // moved to sf0.01 (same-sitting A/B, SCALE.md §r14). Overridable for
-    // A/B via SPARK_GRAFT_WARM_DIR.
-    val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
-      .orElse(Seq("/root/testdata/sf0.01", "/root/testdata/sf0.001")
-        .find(d => new java.io.File(d).isDirectory))
-      .getOrElse("/root/testdata/sf0.001")
-    if (new java.io.File(warmDir).isDirectory)
+    // sf0.01 first (sf0.001 fallback): the sf0.001 warmup leaves
+    // sf0.1-shape code paths (AQE join choices, bigger-batch loops)
+    // uncompiled, so each entry's first timed sample carried 1.6-3.4 s of
+    // background C2 JIT (SCALE.md §r14).
+    val warmDir = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.001")
+      .find(d => new java.io.File(d).isDirectory)
+    warmDir.foreach { dir =>
       selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        try fn(spark, dir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
         finally sweep()
       }
+    }
 
-    // min over (reps × passes) timings per query. Two decorrelation axes:
-    //  - PASSES: back-to-back runs of the same query inside one sweep —
-    //    masks GC pauses and background JIT (observed 10x+ single-run
-    //    outliers);
-    //  - REPS: whole-catalog sweeps, so the two timings of any one query
-    //    are minutes apart. A host-level load spike (co-tenant CPU — the
-    //    measured ±10-12% swing source, which taxes BOTH consecutive
-    //    passes equally) lands on different queries in different sweeps,
-    //    and the per-entry min across sweeps discards it. This encodes
-    //    the "min-combine >= 2 fresh runs" protocol that used to be
-    //    manual discipline.
-    // Defaults (reps=2, passes=1) keep total timed work at two
-    // executions per query, decorrelated in time.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "1").toInt
-    // total executions per query = reps x passes. PASSES' default dropped
-    // 2 -> 1 when REPS (default 2) took over decorrelation; a legacy
-    // caller pinning ONLY the old knob still means "passes executions
-    // total", so reps defaults to 1 in that case — the old back-to-back
-    // protocol, preserved like-for-like (and announced on stderr).
-    val legacyPassesOnly = sys.env.contains("SPARK_GRAFT_PASSES") &&
-      !sys.env.contains("SPARK_GRAFT_BENCH_REPS")
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt)
-      .getOrElse(if (legacyPassesOnly) 1 else 2)
-    if (legacyPassesOnly)
-      System.err.println(s"[bench] legacy SPARK_GRAFT_PASSES=$passes " +
-        s"without SPARK_GRAFT_BENCH_REPS: running the old back-to-back " +
-        s"protocol (reps=1, $passes executions per query)")
+    // min over REPS whole-catalog sweeps per query, so the samples of any
+    // one query are minutes apart. A host-level load spike (co-tenant CPU
+    // — the measured ±10-12% swing source, which taxes back-to-back runs
+    // equally) lands on different queries in different sweeps, and the
+    // per-entry min across sweeps discards it.
+    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").fold(2)(_.toInt)
     val samples = scala.collection.mutable
       .LinkedHashMap[String, List[Double]]()
+    val shapes = scala.collection.mutable.LinkedHashMap[String, String]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_BENCH_PROFILE: record per-sample (HotSpot JIT ms, GC ms,
-    // janino codegen compilations) deltas alongside each timing, emitted
-    // in the full artifact — the attribution data for cross-JVM per-entry
-    // variance (is a slow sample taxed by background C2 compilation, a GC
-    // landing inside the window despite the pre-sweep System.gc, or a
-    // codegen-cache miss recompiling stages?).
-    val profileOn = sys.env.contains("SPARK_GRAFT_BENCH_PROFILE")
-    val profiles = scala.collection.mutable
-      .LinkedHashMap[String, List[(Long, Long, Long)]]()
-    def jitMs: Long = Option(java.lang.management.ManagementFactory
-      .getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(0L)
-    def gcMs: Long = {
-      var t = 0L
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .forEach(b => t += math.max(0L, b.getCollectionTime))
-      t
-    }
     (1 to reps).foreach { _ =>
       selected.foreach { case (name, fn) =>
-        var pass = 0
-        while (pass < passes && !errors.contains(name)) {
-          val (j0, g0, c0) =
-            if (profileOn) (jitMs, gcMs,
-              org.apache.spark.sql.graftbridge.Bridge.codegenCompileCount)
-            else (0L, 0L, 0L)
+        if (!errors.contains(name)) {
+          shape.reset()
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             samples(name) =
               ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(name, Nil)
-            if (profileOn)
-              profiles(name) = (jitMs - j0, gcMs - g0,
-                org.apache.spark.sql.graftbridge.Bridge.codegenCompileCount
-                  - c0) :: profiles.getOrElse(name, Nil)
+            // listener events arrive asynchronously: drain the bus
+            // (outside the timed window) before reading the counters
+            org.apache.spark.sql.graftbridge.Bridge
+              .waitForListeners(spark.sparkContext)
+            shapes(name) = shape.json
           } catch {
             case e: Throwable =>
               errors(name) = s"${e.getClass.getName}: " +
                 Option(e.getMessage).getOrElse("").linesIterator
                   .take(1).mkString.take(200)
           } finally sweep()
-          pass += 1
         }
       }
     }
@@ -201,29 +165,23 @@ object Bench {
     }.toSet
     val prodTimings = timings.filter { case (k, _) => prodNames(k) }
     val prodTotal = prodTimings.values.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_prod":$prodTotal,"n_entries":${timings.size},"n_prod":${prodTimings.size},"queries":$qs,"failed":${errors.size},"errors":$errs,"sf":"$sfDir","reps":$reps,"passes":$passes,"spread_med":$spreadMed}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_prod":$prodTotal,"n_entries":${timings.size},"n_prod":${prodTimings.size},"queries":$qs,"failed":${errors.size},"errors":$errs,"sf":"$sfDir","reps":$reps,"spread_med":$spreadMed}"""
     println(line)
     // full-resolution artifact: the driver's BENCH_rN.json keeps only the
     // last ~4 KB of stdout, which truncates per-query timings for ~90 of
     // the catalog's entries — write the complete line to a committed-able
-    // file as well (plus per-entry ALL samples, for spread forensics).
+    // file as well, plus per-entry ALL samples (spread forensics) and the
+    // last sample's scheduler shape.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_full.json")
     if (outPath.nonEmpty) {
-      val allSamples = samples.collect {
-        case (name, times) if !errors.contains(name) =>
-          "\"" + name + "\":[" + times.reverse.mkString(",") + "]"
+      def perEntry(m: Iterable[(String, String)]): String = m.collect {
+        case (name, v) if !errors.contains(name) => "\"" + name + "\":" + v
       }.mkString("{", ",", "}")
-      val profJson = if (!profileOn) "" else {
-        val per = profiles.collect {
-          case (name, ps) if !errors.contains(name) =>
-            "\"" + name + "\":[" + ps.reverse.map { case (j, g, c) =>
-              s"""{"jit_ms":$j,"gc_ms":$g,"codegen_n":$c}"""
-            }.mkString(",") + "]"
-        }.mkString("{", ",", "}")
-        s""","profile":$per"""
-      }
-      val full = line.dropRight(1) + s""","samples":$allSamples$profJson}"""
+      val allSamples = perEntry(samples.map { case (name, times) =>
+        name -> times.reverse.mkString("[", ",", "]") })
+      val full = line.dropRight(1) +
+        s""","samples":$allSamples,"scheduler":${perEntry(shapes)}}"""
       // best-effort: the artifact must never fail a run whose queries
       // all succeeded (e.g. a read-only working directory) — the
       // stdout line above is the contractual output

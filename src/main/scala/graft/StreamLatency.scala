@@ -2,19 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingMetrics
 
 /** Steady-state micro-batch latency for the speed layer at the
-  * reference's 30 s publish cadence. [[StreamBench]] measures THROUGHPUT
-  * (AvailableNow drain of a staged file set); this measures the
-  * per-batch processing time a 30 s-trigger deployment observes under a
-  * SUSTAINED input rate — the number that says whether the pipeline
-  * keeps up (p95 batch duration well under the trigger interval = idle
-  * headroom; approaching it = backlog forming).
+  * reference's 30 s publish cadence. perfbench's `speed_layer` workload
+  * measures THROUGHPUT (closed-loop drain of a staged file set); this
+  * measures the per-batch processing time a 30 s-trigger deployment
+  * observes under a SUSTAINED input rate — the number that says whether
+  * the pipeline keeps up (p95 batch duration well under the trigger
+  * interval = idle headroom; approaching it = backlog forming).
   *
   * Protocol: the `rate` source emits rows at `rowsPerSecond`, shaped
   * deterministically into the events schema (ts/event_type/user_id/
@@ -78,27 +78,13 @@ object StreamLatency {
       s"provider $provider")
     val keyCard = args.lift(5).getOrElse("10000").toLong
     val skip = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // state shards = shuffle partitions; default ties them to the
-    // thread count (the r13-r16 cells), the env override unties them so
-    // "more shards" is measurable WITHOUT thread oversubscription — on
-    // a cluster the two are set independently (executors x cores vs
-    // spark.sql.shuffle.partitions), and the r17 64-thread cell showed
-    // the tied layout conflates the two levers past the core count
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
-      cpus.toString).toInt
-    // process-boundary override (see [[BenchMaster]] / SCALE.md §r18):
-    // under local-cluster the state shards spread across real executor
-    // JVMs (one RocksDB instance set per process) and checkpointing
-    // crosses a process boundary to the shared filesystem
-    val master = BenchMaster.resolve(s"local[$cpus]")
-    val builder = BenchMaster.configure(SparkSession.builder(), master)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
+    val cpus = GraftSession.envCpus(4)
+    // state shards = shuffle partitions (SPARK_GRAFT_SHUFFLE_PARTITIONS
+    // unties them from the thread count); under a local-cluster master the
+    // shards spread across real executor JVMs (one RocksDB instance set
+    // per process) and checkpointing crosses a process boundary to the
+    // shared filesystem (SCALE.md §r18)
+    val builder = GraftSession.builder(cpus)
     val spark = (if (provider.startsWith("rocksdb")) {
       val b = builder.config(
         "spark.sql.streaming.stateStore.providerClass",
@@ -110,6 +96,7 @@ object StreamLatency {
       else b
     } else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     val root = Files.createTempDirectory("graft_streamlat").toString
     // the checkpoint scratch holds the run's full RocksDB state uploads
     // (4-10 GiB per wall-shaped run): left behind, a campaign of them

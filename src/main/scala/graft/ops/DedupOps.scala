@@ -840,14 +840,14 @@ object DedupOps {
     * Input pairs
     * (doc_a < doc_b); output (doc_id, cluster_id = min doc id in the
     * component). Throws `IllegalStateException` if `maxIter` rounds pass
-    * without convergence rather than returning a wrong clustering.
+    * without convergence rather than returning a wrong clustering, and
+    * if a round's materializing action reports no frontier metric.
     *
     * Edge-cache memory: the cache holds 2·|pairs| rows of three
     * numeric columns — measured bytes/edge and the sizing rule live in
-    * SCALE.md §CC memory sizing (probe: `graft.CcMemProbe`). On heaps
-    * below that budget set SPARK_GRAFT_CC_EDGE_LEVEL (see
-    * [[edgeStorageLevel]]) so the fill spills instead of pressuring
-    * execution memory.
+    * SCALE.md §CC memory sizing. On heaps below that budget set
+    * SPARK_GRAFT_CC_EDGE_LEVEL (see [[edgeStorageLevel]]) so the fill
+    * spills instead of pressuring execution memory.
     *
     * Each round's result is eagerly checkpointed: iterative plans
     * otherwise nest the previous round's plan (twice, with the doubling
@@ -861,8 +861,8 @@ object DedupOps {
     * `localCheckpoint` and the superseded round's blocks are freed
     * synchronously each iteration.
     */
-  /** The CC edge-cache LAYOUT, shared by [[dupClusters]] and the
-    * memory-sizing probe (`graft.CcMemProbe`): both edge directions,
+  /** The CC edge-cache LAYOUT of [[dupClusters]] (its measured memory
+    * footprint is in SCALE.md §CC memory sizing): both edge directions,
     * an `_eb` bucket tag, hash(dst)-partitioned into exactly P
     * partitions. Returns (frame, B, P).
     *
@@ -917,10 +917,6 @@ object DedupOps {
     val edgesPlain = layout._1
     val B = layout._2
     val P = layout._3
-    // measurement knob: disable the sparse-frontier edge pruning so its
-    // benefit is A/B-able on the same JVM (output is bit-identical
-    // either way — the filter is superset-safe)
-    val ccNoPrune = sys.env.contains("SPARK_GRAFT_CC_NOPRUNE")
     def ebOf(c: Column): Column = pmod(hash(c), lit(B))
     // don't register a cache entry in plan-audit mode (nothing executes).
     // The within-partition sort on _eb is a LOCAL sort (no shuffle) paid
@@ -964,7 +960,7 @@ object DedupOps {
       // filter is <= 4 In-chunks (cheap per row) and skips >= 7/8 of the
       // cached batches — the long-tail-chain regime it exists for.
       val edgeSide = buckets match {
-        case Some(bs) if bs.length <= B / 8 && !ccNoPrune =>
+        case Some(bs) if bs.length <= B / 8 =>
           edges.where(bucketPred(bs))
         case _ => edges
       }
@@ -995,10 +991,10 @@ object DedupOps {
       // original doc_id attribute, so when prop sits on hash(doc_id)
       // (checkpoint partitioning) only the LEFT side exchanges. The
       // shuffle_hash hint is EXPLICIT (r18): under AQE the runtime
-      // already rewrote this to a hash join, but an AQE-off round
-      // (SPARK_GRAFT_CC_ROUND_AQE) would otherwise fall back to the
-      // planner's SortMergeJoin default and pay two per-round O(V)
-      // sorts the round-plan spec pins against.
+      // already rewrote this to a hash join, but an AQE-off (sparse)
+      // round would otherwise fall back to the planner's SortMergeJoin
+      // default and pay two per-round O(V) sorts the round-plan spec
+      // pins against.
       prop.as("l")
         .join(prop.select(col("doc_id").as("cluster_id"),
             col("cluster_id").as("_ll")).as("p").hint("shuffle_hash"),
@@ -1045,33 +1041,19 @@ object DedupOps {
     // re-planning mainly splits each round into one scheduler job per
     // exchange (a per-round driver barrier tax), while its one real
     // lever, coalescing the nbrMin groupBy exchange, only matters while
-    // the frontier is WIDE. SPARK_GRAFT_CC_ROUND_AQE ∈ on|off|sparse:
-    // `off` disables AQE for every round, `sparse` only for rounds whose
-    // frontier passed the B/8 pruning gate (the straggler regime, where
-    // nbrMin is a handful of rows and the barrier tax is pure loss),
-    // `on` keeps the session setting. Default from the r18 A/B (2 fresh
-    // JVMs × reps=3, min-combined, sf0.1): `sparse` — five-entry CC
-    // subtotal 12.31 s vs 13.97 (on) / 13.96 (off); the chain probe
-    // takes the full straggler-round win (7.23 → 6.26 s) and the plain
-    // wide-frontier entries keep AQE where it demonstrably helps
-    // (mode=off regressed dedup_apply/_triage by 0.3-0.4 s). Numbers in
-    // OPTIMIZATION_r18.md.
+    // the frontier is WIDE. So AQE is off only for rounds whose frontier
+    // passed the B/8 pruning gate (the straggler regime, where nbrMin is
+    // a handful of rows and the barrier tax is pure loss); wide-frontier
+    // rounds keep the session setting. Measured against AQE on/off for
+    // every round in OPTIMIZATION_r18.md and NOTES.md (r19).
     // The seed/edge-fill job above always stays adaptive: its upstream
     // pair pipeline (banding self-join + aggregates) is unpinned and
     // AQE's runtime join rewrites measurably help it. Restored in the
     // finally below; output is bit-identical at any setting (execution
     // strategy only — same trajectory, same labels).
-    val roundAqeMode =
-      sys.env.getOrElse("SPARK_GRAFT_CC_ROUND_AQE", "sparse")
     val sess = pairs.sparkSession
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqePrev = sess.conf.get(aqeKey)
-    def setRoundAqe(sparseRound: Boolean): Unit = roundAqeMode match {
-      case "off" => sess.conf.set(aqeKey, "false")
-      case "sparse" =>
-        sess.conf.set(aqeKey, if (sparseRound) "false" else aqePrev)
-      case _ => ()
-    }
     // local mode: the checkpoint whose blocks the current `labels` lives
     // on; each round frees the superseded one NOW (blocking) — leaving
     // dead rounds to driver GC + ContextCleaner lets storage balloon
@@ -1105,7 +1087,7 @@ object DedupOps {
     // hash(doc_id) layout and every downstream reuse claim holds.
     val nWords = (B + 63) / 64
     def frontierObserve(df: DataFrame): DataFrame = {
-      val ebC = pmod(hash(col("doc_id")), lit(B))
+      val ebC = ebOf(col("doc_id"))
       val chg = col("cluster_id") < col("_old")
       val words = (0 until nWords).map { w =>
         bit_or(when(chg && ebC >= lit(w * 64) && ebC < lit(w * 64 + 64),
@@ -1115,48 +1097,40 @@ object DedupOps {
       }
       df.observe("cc_frontier", words.head, words.tail: _*)
     }
-    def frontierFromMetrics(df: DataFrame): Option[Array[Int]] =
-      df.queryExecution.observedMetrics.get("cc_frontier").map { row =>
-        val out = Array.newBuilder[Int]
-        var w = 0
-        while (w < nWords) {
-          val bits = if (row.isNullAt(w)) 0L else row.getLong(w)
-          var b = 0
-          while (b < 64) {
-            if ((bits & (1L << b)) != 0L) out += w * 64 + b
-            b += 1
-          }
-          w += 1
+    // the metric is a contract, not a best effort: a round whose
+    // materializing action did not report it fails loudly instead of
+    // paying a second scan job over the checkpoint
+    def frontierFromMetrics(df: DataFrame, round: Int): Array[Int] = {
+      val row = df.queryExecution.observedMetrics.getOrElse("cc_frontier",
+        throw new IllegalStateException(s"dupClusters: round $round " +
+          "reported no cc_frontier observed metric"))
+      val out = Array.newBuilder[Int]
+      var w = 0
+      while (w < nWords) {
+        val bits = if (row.isNullAt(w)) 0L else row.getLong(w)
+        var b = 0
+        while (b < 64) {
+          if ((bits & (1L << b)) != 0L) out += w * 64 + b
+          b += 1
         }
-        out.result()
+        w += 1
       }
+      out.result()
+    }
     try while (!converged && i < maxIter) {
       val rt0 = System.nanoTime()
-      setRoundAqe(buckets.exists(bs => bs.length <= B / 8 && !ccNoPrune))
+      val sparseRound = buckets.exists(_.length <= B / 8)
+      sess.conf.set(aqeKey, if (sparseRound) "false" else aqePrev)
       val roundDf = frontierObserve(roundFrame(labels, changedSet, buckets))
       val next = ckpt(roundDf)
       // labels are min-monotone: "changed" == strictly decreased; the
       // lazy filter below feeds next round's delta-messaging join.
       val changedRows = next.filter(col("cluster_id") < col("_old"))
-      // read the frontier bitmap off the materializing action; the old
-      // checkpoint-scan probe remains ONLY as a fallback should the
-      // runtime ever fail to report the metric (e.g. an AQE plan shape
-      // the metric collector cannot traverse) — output is identical
-      // either way, the fallback just pays the extra job the metric
-      // deletes
-      val t0 = System.nanoTime()
-      val observed = frontierFromMetrics(roundDf)
-      val frontierBuckets = observed.getOrElse {
-        changedRows
-          .select(ebOf(col("doc_id")).as("_eb")).rdd
-          .mapPartitions(it => it.map(_.getInt(0)).toSet.iterator)
-          .collect().distinct
-      }
+      // read the frontier bitmap off the materializing action
+      val frontierBuckets = frontierFromMetrics(roundDf, i + 1)
       if (ccLog) System.err.println(
         f"[dupClusters] round ${i + 1} ${(System.nanoTime() - rt0) / 1e9}%.2f s" +
-          s" (probe ${(System.nanoTime() - t0) / 1e6} ms," +
-          s" observed=${observed.isDefined}," +
-          s" frontier buckets ${frontierBuckets.length}/$B)")
+          s" (frontier buckets ${frontierBuckets.length}/$B)")
       if (!reliable) CheckpointLifecycle.release(current)
       current = next
       labels = next.select(col("doc_id"), col("cluster_id"))

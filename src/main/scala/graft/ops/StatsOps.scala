@@ -185,10 +185,13 @@ object StatsOps {
     val perSide = counts.groupBy(col(groupCol), col("_is_ref"))
       .agg(sum(col("_n")).as("_tot"),
         collect_list(struct(col("_bin"), col("_n"))).as("_bins"))
-    // smoothed share per bin, folded to PSI in one small per-group pass
+    // smoothed share per bin, folded to PSI in one small per-group pass.
+    // An empty bin is an empty filtered array: `get` is null-on-miss under
+    // either ANSI setting (`getItem(0)` throws INVALID_ARRAY_INDEX with
+    // ANSI on)
     def share(binsCol: Column, totCol: Column, b: Int): Column = {
-      val n = coalesce(filter(binsCol, x => x.getField("_bin") === b)
-        .getItem(0).getField("_n"), lit(0L))
+      val n = coalesce(get(filter(binsCol, x => x.getField("_bin") === b),
+        lit(0)).getField("_n"), lit(0L))
       (n.cast("double") + 0.5) / (totCol.cast("double") + 0.5 * nBins)
     }
     val ref = perSide.filter(col("_is_ref"))

@@ -27,12 +27,11 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Cumulative count of janino codegen compilations in this JVM
-    * (`CodegenMetrics` is `private[spark]`). Monotonic — callers diff
-    * around a measured region to count generated-code cache misses. */
-  def codegenCompileCount: Long =
-    org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`): callers read listener-side
+    * counters only after this returns. */
+  def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Idempotently add a planner strategy to a live session — the runtime
     * analog of `SparkSessionExtensions.injectPlannerStrategy` for sessions

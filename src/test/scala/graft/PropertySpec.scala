@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.{DedupOps, MetricOps, RelationalOps, SkewOps}
+import org.apache.spark.grafttest.CheckpointDirs
 
 /** ScalaCheck-generated property tests (SURVEY.md §5): structural
   * invariants the reference relies on but never asserts. Plain ScalaCheck
@@ -124,7 +125,22 @@ class PropertySpec extends SparkSpec {
       .map(_.collect { case (a, b) if a != b =>
         (math.min(a, b), math.max(a, b)) }.distinct)
       .suchThat(_.nonEmpty)
-    samples(edgeGen, 5).foreach { edges =>
+    // every round must report its frontier as an observed metric (a
+    // missing one throws): pin that under the session as it is, with AQE
+    // off, and with reliable checkpoints, restoring each afterwards
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqePrev = spark.conf.get(aqeKey)
+    val ckptPrev = spark.sparkContext.getCheckpointDir
+    val postures: Seq[(() => Unit) => Unit] = Seq(
+      body => body(),
+      body => {
+        spark.conf.set(aqeKey, "false")
+        try body() finally spark.conf.set(aqeKey, aqePrev)
+      },
+      body => CheckpointDirs.withDir(spark.sparkContext,
+        java.nio.file.Files.createTempDirectory("graft_prop_ckpt")
+          .toString)(body()))
+    for (posture <- postures; edges <- samples(edgeGen, 5)) posture { () =>
       val got = DedupOps.dupClusters(edges.toDF("doc_a", "doc_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // brute-force: iterate adjacency min-propagation to fixpoint
@@ -142,6 +158,8 @@ class PropertySpec extends SparkSpec {
       }
       assert(got === lbl)
     }
+    assert(spark.conf.get(aqeKey) === aqePrev)
+    assert(spark.sparkContext.getCheckpointDir === ckptPrev)
   }
 
   test("dupClusters resolves a 200-hop duplicate chain within 20 rounds") {

@@ -91,6 +91,22 @@ class SummaryStatsParitySpec extends SparkSpec {
     assert(nw.getAs[Long]("n_cur") === 3L)
   }
 
+  test("psi_drift at sf0.001 gives identical rows with ANSI on and off") {
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(sf).isDirectory, s"$sf missing")
+    def rows(ansi: String) = {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try SparkEntry.queries("psi_drift")(spark, sf).collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+      finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
+    val off = rows("false")
+    assert(off.nonEmpty)
+    assert(rows("true") === off)
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "false")
+  }
+
   test("keySkewProfile: top-K heaviest keys, shares, and the max/mean " +
        "skew factor") {
     import spark.implicits._
