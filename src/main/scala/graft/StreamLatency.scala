@@ -171,9 +171,10 @@ object StreamLatency {
       // state the run leaves behind: store rows after the last measured
       // batch; watermark-discarded rows summed over the measured window.
       // Drops are counted where Spark counts them — at the state
-      // operator, AFTER map-side partial aggregation — so under burst
-      // shaping one dropped row ≈ one late (window, key, user) partial,
-      // not one raw input row
+      // operator, AFTER map-side partial aggregation — so one dropped
+      // row is one late (window, user) partial of the cogroup (late
+      // rows of one user and window collapse into it, whatever their
+      // event type), not one raw input row
       val stateRows = measured.lastOption.toSeq
         .flatMap(_.stateOperators).map(_.numRowsTotal).sum
       val lateDropped = measured

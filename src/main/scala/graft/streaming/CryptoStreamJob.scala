@@ -63,18 +63,23 @@ object CryptoStreamJob {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val tweetsLeg = batch.filter(col("kind") === "tweet")
-          .select(col("event_time").as("created_at_iso"),
-            lit(null).cast("string").as("created_at_raw"),
-            lit(null).cast("long").as("timestamp_ms"),
-            col("symbol").as("crypto_key"), col("text"))
-        val pricesLeg = batch.filter(col("kind") === "price")
-          .select(col("symbol"), col("price"),
-            unix_millis(col("event_time")).as("timestamp"))
-        val metrics = CryptoPipeline.windowedCryptoMetrics(
-          tweetsLeg, pricesLeg, dur)
-        if (!metrics.isEmpty)
-          metrics.write.mode("append").parquet(outDir)
+        // the emptiness probe and both legs read the batch: persist so
+        // the source files are read once per micro-batch
+        val b = batch.persist()
+        try {
+          val tweetsLeg = b.filter(col("kind") === "tweet")
+            .select(col("event_time").as("created_at_iso"),
+              lit(null).cast("string").as("created_at_raw"),
+              lit(null).cast("long").as("timestamp_ms"),
+              col("symbol").as("crypto_key"), col("text"))
+          val pricesLeg = b.filter(col("kind") === "price")
+            .select(col("symbol"), col("price"),
+              unix_millis(col("event_time")).as("timestamp"))
+          val metrics = CryptoPipeline.windowedCryptoMetrics(
+            tweetsLeg, pricesLeg, dur)
+          if (!metrics.isEmpty)
+            metrics.write.mode("append").parquet(outDir)
+        } finally b.unpersist(blocking = true)
       }
       .start()
   }

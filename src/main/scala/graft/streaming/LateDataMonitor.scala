@@ -18,8 +18,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, S
   * caveat: the count is taken where the drop happens — at the state
   * store, AFTER map-side partial aggregation — so several same-batch
   * late rows for one (window, key) group count as ONE dropped state
-  * update. It is a did-we-lose-data signal (nonzero iff something late
-  * was discarded), not a raw-row census. This listener
+  * update. For the J1 cogroup
+  * ([[StreamingMetrics.cogroupedMetricsSink]]) the unit is a
+  * (window, user_id) partial: late rows of every event type for one user
+  * and window collapse into it. It is a did-we-lose-data signal (nonzero
+  * iff something late was discarded), not a raw-row census. This listener
   * folds those per-batch counts into a cumulative per-query counter —
   * O(queries) driver state, nothing added to the executor path, so the
   * cost at 100 TB is zero: the metric piggybacks on progress events the

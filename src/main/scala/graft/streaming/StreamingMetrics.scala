@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 /** Structured Streaming assembly of the reference's speed layer
@@ -12,12 +12,13 @@ import org.apache.spark.sql.Row
   * reproduces Beam's default allowed_lateness=0 discard-late semantics
   * (stream_join.py:479-524 uses default triggers — late records drop).
   *
-  * J1 (the 30 s CoGroupByKey of tweets and prices) is realized as
-  * aggregate-then-full-outer-join per micro-batch in `foreachBatch` —
-  * exactly the reference's own batch-layer formulation
-  * (batch_to_mongo.py:235) — because a stream-stream outer join cannot
-  * emit a (window,key) row when only one side has data (SURVEY.md §7
-  * risk 1).
+  * J1 (the 30 s CoGroupByKey of tweets and prices) is ONE stateful
+  * conditional aggregation keyed by (window, key): each leg is a
+  * `sum(when(leg, 1))` column, so a (window, key) seen by one leg only
+  * carries null on the other — the full-outer cogroup of the reference's
+  * batch layer (batch_to_mongo.py:235) without a per-batch join. A
+  * stream-stream outer join could not emit a (window, key) row when only
+  * one side has data (SURVEY.md §7 risk 1).
   */
 object StreamingMetrics {
 
@@ -35,39 +36,52 @@ object StreamingMetrics {
       .select(col("window.start").as("window_start"), col(keyCol),
         col("n_events"), col("avg_value"), col("last_value"))
 
-  /** J1 per micro-batch: two legs aggregated then full-outer joined on
-    * (window_start, key), written by `sink` (parquet in tests; any
-    * idempotent writer in production — T8).
+  /** J1: the per-window cogroup of two event-type legs, keyed by
+    * (window_start, user_id), written by `sink` once per micro-batch
+    * (parquet in tests; any idempotent writer in production — T8).
+    *
+    * One watermarked aggregation counts both legs: `n_a` over
+    * `leftTypes`, `n_b` over `rightTypes`. This equals aggregating each
+    * leg and full-outer joining them on (window_start, user_id):
+    *  - append mode emits a (window, key) once, in the batch whose
+    *    watermark passes the window end — the same batch for every event
+    *    type, so both legs of a key arrive in one row;
+    *  - `sum` over no non-null input is null, which is exactly the
+    *    outer join's missing side.
+    *
+    * A null `user_id` is one group, as in Beam's CoGroupByKey (which
+    * groups by key value, null included): its row carries both legs.
+    * A join on the key would instead emit two unmatched rows, since
+    * null never equals null.
+    *
+    * Late rows are dropped at the state store per (window, user_id)
+    * partial, counted once per micro-batch in the query's progress.
+    * Each action `sink` runs on its batch re-runs the stateful plan, so
+    * a sink that needs more than one action should persist the batch.
     */
   def cogroupedMetricsSink(
       events: DataFrame, leftTypes: Seq[String], rightTypes: Seq[String],
       dur: String, watermark: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val windowed = events
+    val isL = col("event_type").isin(leftTypes: _*)
+    val isR = col("event_type").isin(rightTypes: _*)
+    events
       .withWatermark("ts", watermark)
-      .filter(col("event_type").isin(leftTypes ++ rightTypes: _*))
-      .groupBy(window(col("ts"), dur), col("event_type"), col("user_id"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_v"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("user_id"), col("n"), col("avg_v"))
-    windowed.writeStream
+      .filter(isL || isR)
+      .groupBy(window(col("ts"), dur), col("user_id"))
+      .agg(sum(when(isL, 1L)).as("n_a"), sum(when(isR, 1L)).as("n_b"))
+      .select(col("window.start").as("window_start"), col("user_id"),
+        col("n_a"), col("n_b"))
+      .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val l = batch.filter(col("event_type").isin(leftTypes: _*))
-          .groupBy(col("window_start"), col("user_id"))
-          .agg(sum(col("n")).as("n_a"))
-        val r = batch.filter(col("event_type").isin(rightTypes: _*))
-          .groupBy(col("window_start"), col("user_id"))
-          .agg(sum(col("n")).as("n_b"))
-        sink(l.join(r, Seq("window_start", "user_id"), "full_outer"), id)
-      }
+      .foreachBatch(sink)
   }
 
   /** Genuine stream-stream inner join (the J1-inner variant): both streams
     * watermarked, joined on key + a bounded event-time band. Spark buffers
     * each side's state until the watermark passes the band — this is the
     * right tool when BOTH raw streams must pair row-by-row; the full-outer
-    * per-window cogroup stays on the aggregate-then-join path
+    * per-window cogroup stays a conditional aggregation
     * ([[cogroupedMetricsSink]]) because stream-stream outer joins cannot
     * emit a row for a window where only one side has data (SURVEY.md §7
     * risk 1).
